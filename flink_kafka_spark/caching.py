@@ -21,18 +21,18 @@ Contract:
   :func:`release_all` after materializing each result, so nothing
   lingers between timed queries.
 
-RDD-level persists (``localCheckpoint`` in the connected-components
-loop) need the same lifecycle but are invisible to DataFrame
+RDD-level persists (the ``localCheckpoint`` lineage cuts of the
+fixpoint loops) need the same lifecycle but are invisible to DataFrame
 ``unpersist()`` and ``spark.catalog.clearCache()`` — they live in
-``sc.getPersistentRDDs()`` only (round-5 verdict item 1: every CC
-invocation stranded up to max_iter checkpointed label RDDs for the
-session lifetime). :func:`persistent_rdd_ids` / :func:`unpersist_rdds`
-/ :func:`track_rdds` give those persists the same track/release
-contract. One semantic difference, by design: unpersisting a
-locally-checkpointed RDD destroys its data (the persisted blocks ARE
-the checkpoint; the lineage is truncated), so a released
-checkpoint-backed DataFrame cannot be re-materialized — callers get a
-fresh frame by re-invoking the query, which every harness here does.
+``sc.getPersistentRDDs()`` only. :func:`persistent_rdd_ids` /
+:func:`unpersist_rdds` / :func:`track_rdds` give those persists the
+same track/release contract; their one caller is
+``operators/iterate.py``, which owns the cuts of every loop. One
+semantic difference, by design: unpersisting a locally-checkpointed
+RDD destroys its data (the persisted blocks ARE the checkpoint; the
+lineage is truncated), so a released checkpoint-backed DataFrame
+cannot be re-materialized — callers get a fresh frame by re-invoking
+the query, which every harness here does.
 """
 
 from __future__ import annotations
@@ -55,7 +55,7 @@ def track(df: DataFrame) -> DataFrame:
 def persistent_rdd_ids(sc) -> set[int]:
     """Ids of every RDD currently registered persistent with the
     context (includes localCheckpoint persists, which register
-    synchronously at the ``localCheckpoint()`` call)."""
+    synchronously at the ``localCheckpoint`` call)."""
     return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
 
 
@@ -72,19 +72,20 @@ def unpersist_rdds(sc, ids) -> int:
 
 
 def track_rdds(ids, sc=None) -> None:
-    """Register RDD-level persist ids (e.g. the final CC label
-    checkpoint) for deferred release by :func:`release_all`. The
+    """Register RDD-level persist ids (e.g. a loop's final lineage
+    cut) for deferred release by :func:`release_all`. The
     owning context's applicationId is recorded alongside: bare integer
     ids are only meaningful within ONE SparkContext, and releasing
     them against a restarted context could unpersist an unrelated RDD
     that happens to reuse the id — fatal for a localCheckpoint, whose
     blocks ARE the data.
 
-    Pass the owning ``sc`` explicitly when the caller holds it (the CC
-    loop does): resolving via the thread-local active session records
-    ``app=None`` when no session is active on the calling thread, and
-    a None-app record is dropped unreleased by :func:`release_all` —
-    leak-safe, but the release mechanism never fires."""
+    Pass the owning ``sc`` explicitly when the caller holds it
+    (operators/iterate.py does): resolving via the thread-local active
+    session records ``app=None`` when no session is active on the
+    calling thread, and a None-app record is dropped unreleased by
+    :func:`release_all` — leak-safe, but the release mechanism never
+    fires."""
     if ids:
         if sc is None:
             spark = SparkSession.getActiveSession()

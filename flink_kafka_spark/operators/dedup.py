@@ -418,31 +418,6 @@ def _salted_min_sigs(hash_arr, k: int):
     return nz, sigs
 
 
-def minhash_signatures(df: DataFrame, id_col: str, n: int = 3, k: int = 32) -> DataFrame:
-    """k-permutation MinHash signature per doc (empty docs — fewer
-    than n tokens, so no shingles — get an empty signature array).
-    Tokenize/shingle/base-hash stay JVM-side (pushdown- and
-    codegen-friendly); only the salted-min runs in the vectorized
-    Arrow kernel :func:`_salted_min_sigs`."""
-
-    @F.pandas_udf("array<long>")
-    def sig_udf(hash_arr: pd.Series) -> pd.Series:
-        import numpy as np
-
-        nz, sigs = _salted_min_sigs(hash_arr, k)
-        signed = sigs.view(np.int64)
-        out = [[] for _ in range(len(hash_arr))]
-        for row_i, doc_i in enumerate(np.flatnonzero(nz)):
-            out[doc_i] = signed[row_i].tolist()
-        return pd.Series(out)
-
-    return (
-        shingle_sets(df, id_col, n)
-        .withColumn("hash_arr", F.expr("transform(shingle_arr, s -> xxhash64(s))"))
-        .select(id_col, sig_udf("hash_arr").alias("signature"))
-    )
-
-
 def _band_hashes_udf(k: int, bands: int):
     """Arrow kernel: per doc, the ``bands`` LSH band keys directly —
     FNV-1a folded over each band's r=k/bands MinHash values — skipping
@@ -1054,8 +1029,8 @@ def chunked_hamming_pairs(
     OFF by default: a hint is a promise AQE can't retract, and a
     corpus-sized "batch" (the registered parity-split query, a
     backfill run) would die on the 8 GB broadcast ceiling instead of
-    degrading to a shuffle (the pagerank ``broadcast_ranks``
-    precedent). Unhinted, AQE still broadcasts a small side at
+    degrading to a shuffle (the reason pagerank's rank join carries
+    no hint either). Unhinted, AQE still broadcasts a small side at
     runtime.
 
     Returns (id_a, id_b, hamming) distinct; Hamming = summed
@@ -1286,8 +1261,8 @@ def connected_components(
     loop — on a real corpus the near-dup graph is a tiny fraction of
     the documents, and every isolated doc is trivially its own
     singleton cluster (anti-joined back in at the end against the
-    BROADCAST label set — the corpus never shuffles). See
-    :func:`_cc_labels` for the loop's checkpoint lifecycle.
+    BROADCAST label set — the corpus never shuffles). The loop itself
+    is :func:`_cc_labels`.
     """
     in_graph = _cc_labels(edges, src_col, dst_col, max_iter).select(
         F.col("node").alias(id_col), F.col("comp").alias("cluster_id")
@@ -1378,12 +1353,17 @@ def cc_loop_body(
         from ..caching import track
 
         sym = track(sym.persist())
-    labels = (
+    return _cc_round(sym, _cc_init_labels(sym), jump)
+
+
+def _cc_init_labels(sym: DataFrame) -> DataFrame:
+    """Round-0 labels: every node that appears in an edge is its own
+    component. Shared by :func:`_cc_labels` and :func:`cc_loop_body`."""
+    return (
         sym.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("comp", F.col("node"))
     )
-    return _cc_round(sym, labels, jump)
 
 
 def _cc_labels(
@@ -1399,87 +1379,45 @@ def _cc_labels(
     The symmetrized edge set is built with a single explode pass (a
     union of two selects would compute the upstream pair pipeline
     twice), pre-partitioned on src and persisted once; per round only
-    (node, label) pairs shuffle. LAZY `localCheckpoint` after each
-    round truncates the lineage (iterative DataFrame plans grow
-    without bound otherwise): the convergence probe's collect() is the
-    action that materializes each round's checkpoint, so every round
-    costs ONE job instead of two (eager checkpoint + probe). On a
-    cluster with unreliable executors use `checkpoint()` to HDFS
-    instead. Convergence is detected with a 1-row aggregate on the
-    label sum, which is strictly decreasing until fixpoint (labels
+    (node, label) pairs shuffle. Each round's labels are cut through
+    operators/iterate.py:LineageCuts, and the convergence probe's
+    collect() is the action that materializes the cut, so every round
+    costs ONE job. Convergence is detected with a 1-row aggregate on
+    the label sum, which is strictly decreasing until fixpoint (labels
     only ever shrink) — no per-round join against the previous labels
-    needed.
-
-    Checkpoint lifecycle (round-5 verdict item 1): localCheckpoint
-    persists live in ``sc.getPersistentRDDs()`` where DataFrame
-    ``unpersist()``/``clearCache()`` can't reach them, so each round's
-    checkpoint RDD ids are captured (the persist registers
-    synchronously at the ``localCheckpoint`` call, before any job
-    runs) and the PREVIOUS round's blocks are dropped as soon as the
-    convergence probe has materialized the new round — the loop holds
-    at most two rounds' label blocks at any instant. The FINAL labels
-    checkpoint backs the returned frame, so it is registered with
-    ``caching.track_rdds`` and released at the next query boundary
-    (after the consumer has materialized; re-materializing the frame
-    after that requires re-invoking the operator, which every harness
-    here does).
+    needed. The final cut backs the returned frame and is released at
+    the next query boundary.
     """
-    from ..caching import persistent_rdd_ids, track_rdds, unpersist_rdds
-
-    sc = edges.sparkSession.sparkContext
-
-    def _chk(df: DataFrame) -> "tuple[DataFrame, frozenset[int]]":
-        before = persistent_rdd_ids(sc)
-        out = df.localCheckpoint(eager=False)
-        return out, frozenset(persistent_rdd_ids(sc) - before)
+    from .iterate import LineageCuts
 
     sym = _sym_edges(edges, src_col, dst_col).persist()
-    live_ids: frozenset[int] = frozenset()
     try:
-        labels, live_ids = _chk(
-            sym.select(F.col("src").alias("node")).distinct().withColumn(
-                "comp", F.col("node")
-            )
-        )
-        prev_sum = None
-        converged = False
-        for i in range(max_iter):
-            # pointer jumping gated to round >= 3: real near-dup graphs
-            # are shallow (diameter <= 4 converges in the plain rounds
-            # and never pays the extra self-join shuffle); only a
-            # pathological chain (boilerplate mega-cluster) reaches the
-            # jumping rounds, which is exactly when the O(diameter)
-            # loop (and its hard max_iter fail) needs the help.
-            prop = _cc_round(sym, labels, jump=i >= 2)
-            labels, new_ids = _chk(prop)
-            # fold the freshly registered checkpoint into the tracked
-            # set BEFORE the probe action: localCheckpoint registers
-            # its persist synchronously, so if the collect below raises
-            # the except handler must release this round's blocks too,
-            # not just the previous round's (round-6 advice).
-            live_ids = live_ids | new_ids
-            cur_sum = labels.agg(
-                F.sum(F.col("comp").cast("decimal(38,0)"))
-            ).collect()[0][0]
-            # the collect materialized the NEW checkpoint — the previous
-            # round's blocks are now dead weight in the block manager
-            unpersist_rdds(sc, live_ids - new_ids)
-            live_ids = new_ids
-            if cur_sum == prev_sum:
-                converged = True
-                break
-            prev_sum = cur_sum
-    except BaseException:
-        unpersist_rdds(sc, live_ids)
-        raise
+        with LineageCuts(edges.sparkSession.sparkContext) as cuts:
+            labels = cuts.cut(_cc_init_labels(sym))
+            prev_sum = None
+            for i in range(max_iter):
+                # pointer jumping gated to round >= 3: real near-dup
+                # graphs are shallow (diameter <= 4 converges in the
+                # plain rounds and never pays the extra self-join
+                # shuffle); only a pathological chain (boilerplate
+                # mega-cluster) reaches the jumping rounds, which is
+                # exactly when the O(diameter) loop (and its hard
+                # max_iter fail) needs the help.
+                labels = cuts.cut(_cc_round(sym, labels, jump=i >= 2))
+                cur_sum = labels.agg(
+                    F.sum(F.col("comp").cast("decimal(38,0)"))
+                ).collect()[0][0]
+                cuts.materialized()
+                if cur_sum == prev_sum:
+                    break
+                prev_sum = cur_sum
+            else:
+                # a silent partial result would split real clusters — refuse
+                raise RuntimeError(
+                    f"connected_components did not converge in {max_iter} "
+                    "rounds (component diameter exceeds max_iter); raise "
+                    "max_iter"
+                )
     finally:
         sym.unpersist()  # labels is checkpointed — safe even on raise
-    if not converged:
-        # a silent partial result would split real clusters — refuse
-        unpersist_rdds(sc, live_ids)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(component diameter exceeds max_iter); raise max_iter"
-        )
-    track_rdds(live_ids, sc=sc)
     return labels

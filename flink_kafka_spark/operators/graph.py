@@ -26,7 +26,6 @@ def _pr_round(
     zeros: DataFrame,
     teleport: int,
     damping_pct: int,
-    broadcast_ranks: bool = False,
 ) -> DataFrame:
     """One PageRank round: the rank-side join onto the persisted
     (src, dst, w, wsum) edge frame, then the groupBy(dst) fold with the
@@ -35,8 +34,7 @@ def _pr_round(
     iteration loop in :func:`pagerank` and the plan-audit surface
     :func:`pagerank_loop_body` so the audited plan IS the executed
     round, by construction."""
-    rank_side = F.broadcast(ranks) if broadcast_ranks else ranks
-    contrib = e.join(rank_side, e["src"] == ranks["node"]).select(
+    contrib = e.join(ranks, e["src"] == ranks["node"]).select(
         F.col("dst").alias("node"), F.expr("(r * w) div wsum").alias("c")
     )
     return (
@@ -52,25 +50,64 @@ def _pr_round(
     )
 
 
+def _pr_inputs(
+    edges: DataFrame, nodes: DataFrame, id_col: str, persist: bool
+) -> "tuple[DataFrame, DataFrame, DataFrame]":
+    """The loop-invariant frames of a PageRank run, shared by
+    :func:`pagerank` and :func:`pagerank_loop_body`: the node frame,
+    the (src, dst, w, wsum) edge frame and the zero-contribution rows.
+    With ``persist`` the node and edge frames are persisted and
+    registered with caching.track (released at the next registered-
+    query boundary).
+
+    The per-src weight sums are joined onto the edges ONCE here, with
+    no broadcast hint: wsum is NODE-COUNT-sized, so a forced broadcast
+    is a driver collect that dies on the 8 GB ceiling for a
+    billion-node graph, while AQE broadcasts it at runtime whenever it
+    is genuinely small (the bounded source-level query here) and
+    degrades to a co-partitioned shuffle otherwise — and both frames
+    are persisted, so either plan executes exactly once. The edge
+    frame is pre-partitioned on src before the persist (guide §2.4
+    "two operations keyed the same way can share one exchange") — the
+    CC loop's _sym_edges discipline: every round joins the rank frame
+    on e.src, so a persisted hash(src) layout lets the planner satisfy
+    the join's edge-side distribution from the cache instead of
+    re-exchanging the (billion-edge at scale) frame each round; one
+    extra setup exchange buys `iterations` elided ones.
+
+    The zero-contribution rows folded into the per-round groupBy give
+    every node a sum (a dangling node's is the +0 row) without a
+    node-sized join or broadcast — the summed frame never crosses the
+    driver even for a billion-node graph."""
+    node_frame = nodes.select(F.col(id_col).alias("node"))
+    wsum = edges.groupBy("src").agg(F.sum("w").alias("wsum"))
+    e = edges.join(wsum, "src").select("src", "dst", "w", "wsum").repartition("src")
+    if persist:
+        from ..caching import track
+
+        node_frame = track(node_frame.persist())
+        e = track(e.persist())
+    zeros = node_frame.select("node", F.lit(0).cast("long").alias("c"))
+    return node_frame, e, zeros
+
+
 def pagerank_loop_body(
     edges: DataFrame,
     nodes: DataFrame,
     id_col: str = "id",
     damping_pct: int = 85,
     unit: int = 1_000_000_000,
-    broadcast_ranks: bool = False,
-    broadcast_wsum: bool = False,
     cache_inputs: bool = False,
 ) -> DataFrame:
     """Plan-audit surface (r15 verdict item 2): the UN-CHECKPOINTED
     frame of one iteration round, exactly as :func:`pagerank`'s loop
-    builds it (the shared :func:`_pr_round` body), applied to the
-    round-0 rank frame. ``explain()`` on the frame :func:`pagerank`
-    RETURNS sees only a localCheckpoint scan — the lineage cut that
-    keeps Catalyst analysis O(1) also blinds every plan audit to the
-    loop body, which is where PageRank's actual per-round cost (one
-    edges-sized join + one groupBy(dst) shuffle) lives. PLANS.md and
-    tests/test_plans.py explain THIS frame instead.
+    builds it (the shared :func:`_pr_inputs` and :func:`_pr_round`),
+    applied to the round-0 rank frame. ``explain()`` on the frame
+    :func:`pagerank` RETURNS sees only a localCheckpoint scan — the
+    lineage cut that keeps Catalyst analysis O(1) also blinds every
+    plan audit to the loop body, which is where PageRank's actual
+    per-round cost (one edges-sized join + one groupBy(dst) shuffle)
+    lives. PLANS.md and tests/test_plans.py explain THIS frame instead.
 
     With ``cache_inputs=False`` (the pytest pins) nothing persists and
     no job runs: plan shape only, upstream lineage shown raw.
@@ -80,28 +117,11 @@ def pagerank_loop_body(
     per-round cost — the number a capacity plan multiplies by the
     iteration count. Either way teleport/base divide by the
     driver-scalar node count, pinned to 1 here so no count() job runs
-    (plan shape is independent of literal values); persists are
-    registered with caching.track and released at the next registered-
-    query boundary."""
-    node_frame = nodes.select(F.col(id_col).alias("node"))
-    wsum = edges.groupBy("src").agg(F.sum("w").alias("wsum"))
-    wsum_side = F.broadcast(wsum) if broadcast_wsum else wsum
-    # mirror pagerank()'s src pre-partitioning so the audited round
-    # IS the executed round (the shared-_pr_round contract)
-    e = (
-        edges.join(wsum_side, "src")
-        .select("src", "dst", "w", "wsum")
-        .repartition("src")
-    )
-    if cache_inputs:
-        from ..caching import track
-
-        node_frame = track(node_frame.persist())
-        e = track(e.persist())
+    (plan shape is independent of literal values)."""
+    node_frame, e, zeros = _pr_inputs(edges, nodes, id_col, cache_inputs)
     ranks = node_frame.withColumn("r", F.lit(unit).cast("long"))
-    zeros = node_frame.select("node", F.lit(0).cast("long").alias("c"))
     teleport = (100 - damping_pct) * unit // 100
-    return _pr_round(e, ranks, zeros, teleport, damping_pct, broadcast_ranks)
+    return _pr_round(e, ranks, zeros, teleport, damping_pct)
 
 
 def pagerank(
@@ -111,8 +131,6 @@ def pagerank(
     iterations: int = 12,
     damping_pct: int = 85,
     unit: int = 1_000_000_000,
-    broadcast_ranks: bool = False,
-    broadcast_wsum: bool = False,
 ) -> DataFrame:
     """Weighted PageRank over ``edges (src, dst, w BIGINT)`` and
     ``nodes (id_col)``: ``iterations`` fixed rounds of
@@ -135,51 +153,24 @@ def pagerank(
     and edges from the same frame; external callers must too.
 
     Scale shape: the weighted-out-degree join is precomputed ONCE into
-    a persisted (src, dst, w, wsum) frame; each round then costs one
-    rank-frame join onto it plus one edges-sized groupBy(dst) shuffle —
-    the inherent PageRank cost. ``broadcast_ranks`` controls the
-    rank-side join strategy and defaults to FALSE: with no hint the
-    planner (and AQE at runtime) picks the join, which localizes tiny
-    rank frames anyway and — the scale contract — never plans a
-    driver-side broadcast build of a billion-node rank frame. The
-    hinted path additionally costs one broadcast-collect JOB per round
-    (the hint forces a collect even when the frame is already cached),
-    measured 6.6 s vs 3.8 s for the 12-round loop at sf0.1 — so the
-    hint is off even for the bounded source-level query, and
-    ``broadcast_ranks=True`` exists only for callers who have measured
-    a plan where the static SMJ shuffle on the edge side dominates.
-    N is a single-int driver scalar (same justification as the CC
-    convergence probe). Rank frames are LAZY-localCheckpointed with an
-    explicit count() as the materializing action (the CC loop's
-    lifecycle, operators/dedup.py:_cc_labels — eager=True would run a
-    job inside the RDD-id delta window and sweep the edge cache id,
-    see _chk), and the cut runs in batches of CHK_EVERY=3 rounds, not
-    every round: without any cut, round i's logical plan contains all
-    i-1 predecessors and Catalyst re-analyzes the whole tree per
-    round — measured 49 s for 12 rounds at sf0.1 vs ~4 s batched. The
-    previous round's checkpoint blocks are dropped as soon as the new
-    round is materialized (the loop holds two node-sized rank frames
-    at most); the final round's blocks back the returned frame, so
-    they are registered with caching.track_rdds and released at the
-    next query boundary."""
-    from ..caching import persistent_rdd_ids, track, track_rdds, unpersist_rdds
+    a persisted (src, dst, w, wsum) frame (:func:`_pr_inputs`); each
+    round then costs one rank-frame join onto it plus one edges-sized
+    groupBy(dst) shuffle — the inherent PageRank cost. The rank-side
+    join carries no hint: the planner (and AQE at runtime) picks the
+    join, which localizes tiny rank frames anyway and — the scale
+    contract — never plans a driver-side broadcast build of a
+    billion-node rank frame. A hinted rank join also costs one
+    broadcast-collect JOB per round (the hint forces a collect even
+    when the frame is already cached), measured 6.6 s vs 3.8 s for the
+    12-round loop at sf0.1. N is a single-int driver scalar (same
+    justification as the CC convergence probe). The rank frame's
+    lineage is cut through operators/iterate.py:LineageCuts every
+    CHK_EVERY=3 rounds, with an explicit count() as the materializing
+    action; the final cut backs the returned frame and is released at
+    the next query boundary."""
+    from .iterate import LineageCuts
 
-    sc = edges.sparkSession.sparkContext
-
-    def _chk(df: DataFrame) -> "tuple[DataFrame, frozenset[int]]":
-        # LAZY checkpoint: the RDD registers synchronously at the call
-        # (the _cc_labels contract), so the id delta contains ONLY the
-        # checkpoint RDD. An eager=True checkpoint runs a job inside
-        # the delta window, and the first such job also materializes
-        # the persisted edge frame — whose cache RDD id would then be
-        # swept into `live` and destroyed at the next cut, silently
-        # recomputing edges+wsum every round thereafter (r10
-        # second-review finding). The caller materializes explicitly.
-        before = persistent_rdd_ids(sc)
-        out = df.localCheckpoint(eager=False)
-        return out, frozenset(persistent_rdd_ids(sc) - before)
-
-    node_frame = track(nodes.select(F.col(id_col).alias("node")).persist())
+    node_frame, e, zeros = _pr_inputs(edges, nodes, id_col, persist=True)
     n = node_frame.count()
     if n == 0:
         raise ValueError(
@@ -204,59 +195,21 @@ def pagerank(
         )
     base = unit // n
     teleport = (100 - damping_pct) * base // 100
-
-    # ONE-TIME setup join of the per-src weight sums onto the edges.
-    # No broadcast hint by default (r16, the broadcast_ranks/e266ddc
-    # discipline): wsum is NODE-COUNT-sized, so a forced broadcast is
-    # a driver collect that dies on the 8 GB ceiling for a
-    # billion-node graph, while AQE broadcasts it at runtime whenever
-    # it is genuinely small (the bounded source-level query here) and
-    # degrades to a co-partitioned shuffle otherwise — and both edge
-    # frames are persisted, so either plan executes exactly once.
-    # ``broadcast_wsum=True`` exists for callers who measured a static
-    # plan where the SMJ sort on the edge side dominates setup.
-    wsum = edges.groupBy("src").agg(F.sum("w").alias("wsum"))
-    wsum_side = F.broadcast(wsum) if broadcast_wsum else wsum
-    # pre-partitioned on src before the persist (r18, guide §2.4
-    # "two operations keyed the same way can share one exchange") —
-    # the CC loop's _sym_edges discipline applied here: every round
-    # joins the rank frame on e.src, so a persisted hash(src) layout
-    # lets the planner satisfy the join's edge-side distribution from
-    # the cache instead of re-exchanging the (billion-edge at scale)
-    # frame each of the `iterations` rounds; one extra setup exchange
-    # buys `iterations` elided ones
-    e = track(
-        edges.join(wsum_side, "src")
-        .select("src", "dst", "w", "wsum")
-        .repartition("src")
-        .persist()
-    )
     ranks = node_frame.withColumn("r", F.lit(base).cast("long"))
-    live: frozenset[int] = frozenset()
-    # Checkpoint every CHK_EVERY rounds, not every round: the cut only
-    # needs to keep the analyzed tree SHALLOW (depth <= 3 is cheap for
+    # Cut every CHK_EVERY rounds, not every round: the cut only needs
+    # to keep the analyzed tree SHALLOW (depth <= 3 is cheap for
     # Catalyst), and results are identical wherever the lineage is cut
-    # (pure integer arithmetic). With the rank broadcast hint off, the
-    # loop's only job barriers are the CHK_EVERY materializations (4
-    # for 12 rounds); measured cadence sweep at sf0.1 (3 trials, min):
-    # chk2 4.0 s, chk3 3.7 s, chk4 3.7 s, chk6 4.3 s — flat around 3,
-    # so CHK_EVERY=3 stands. (The hinted loop pays a broadcast-collect
-    # job per round on top: 6.6 s at the same cadence.)
+    # (pure integer arithmetic). With no cut at all the 12 rounds took
+    # 49 s at sf0.1 vs ~4 s batched. The loop's only job barriers are
+    # the CHK_EVERY materializations (4 for 12 rounds); measured
+    # cadence sweep at sf0.1 (3 trials, min): chk2 4.0 s, chk3 3.7 s,
+    # chk4 3.7 s, chk6 4.3 s — flat around 3, so CHK_EVERY=3 stands.
     CHK_EVERY = 3
-    # zero-contribution rows folded into the per-round groupBy replace
-    # the old `node_frame LEFT JOIN broadcast(summed)`: same integer
-    # result (a dangling node's sum is the +0 row instead of a
-    # coalesced NULL) with one less broadcast exchange per round and
-    # no node-sized broadcast at all — the summed frame never crosses
-    # the driver even for a billion-node graph.
-    zeros = node_frame.select("node", F.lit(0).cast("long").alias("c"))
-    for i in range(iterations):
-        ranks = _pr_round(e, ranks, zeros, teleport, damping_pct, broadcast_ranks)
-        if (i + 1) % CHK_EVERY == 0 or i + 1 == iterations:
-            ranks, new_ids = _chk(ranks)
-            ranks.count()  # materialize the new cut (a localCheckpoint
-            # cannot be recomputed once its predecessor's blocks drop)
-            unpersist_rdds(sc, live)
-            live = new_ids
-    track_rdds(live, sc=sc)
+    with LineageCuts(edges.sparkSession.sparkContext) as cuts:
+        for i in range(iterations):
+            ranks = _pr_round(e, ranks, zeros, teleport, damping_pct)
+            if (i + 1) % CHK_EVERY == 0 or i + 1 == iterations:
+                ranks = cuts.cut(ranks)
+                ranks.count()
+                cuts.materialized()
     return ranks.select("node", F.col("r").alias("rank_e9"))

@@ -1754,13 +1754,12 @@ def bpe_learn_merges(
     the argmax is a 1-row driver collect (like CC's convergence
     probe), and the merge rewrite is a pure executor-side fold
     (aggregate() over each word's symbol array, no shuffle). Per-round
-    frames use the CC checkpoint lifecycle (lazy localCheckpoint, the
-    argmax collect as the materializing action): the lineage cut keeps
+    frames are cut through operators/iterate.py:LineageCuts, with the
+    argmax collect as the materializing action: the lineage cut keeps
     Catalyst from re-analyzing every prior round's nested-lambda fold,
-    and the round before last is unpersisted as soon as the current
-    round materializes — the block store holds at most two vocabulary
-    frames, and nothing survives past the return (the merge table is a
-    LocalRelation).
+    and the block store holds at most two vocabulary frames. Nothing
+    survives past the return (the merge table is a LocalRelation)
+    unless the vocabulary state is returned too.
 
     ``return_vocab_state=True`` additionally returns the trainer's
     FINAL per-word symbol frame ``(w, syms)`` — the vocabulary with
@@ -1769,19 +1768,12 @@ def bpe_learn_merges(
     recompute from scratch (r19, guide §1.2 "don't compute things you
     throw away": the learn-then-tokenize query paid the whole vocab
     rewrite — distinct + one projection layer per merge — twice). The
-    state frame is backed by the final round's checkpoint blocks,
-    registered with caching.track_rdds for release at the next query
+    state frame is backed by the last cuts, released at the next query
     boundary; consume it within the same query.
     """
-    from ..caching import persistent_rdd_ids, track_rdds, unpersist_rdds
+    from .iterate import LineageCuts
 
     spark = docs.sparkSession
-    sc = spark.sparkContext
-
-    def _chk(df: DataFrame) -> "tuple[DataFrame, frozenset[int]]":
-        before = persistent_rdd_ids(sc)
-        out = df.localCheckpoint(eager=False)
-        return out, frozenset(persistent_rdd_ids(sc) - before)
 
     # layout spread before the corpus explode (guide §2.5): the
     # split/explode + map-side combine feeding the vocab shuffle
@@ -1800,18 +1792,17 @@ def bpe_learn_merges(
     # wants the final state — the plain trainer's frames stay as lean
     # as before
     state_cols = ["w"] if return_vocab_state else []
-    seqs, cur_ids = _chk(
-        vocab.select(
-            *state_cols,
-            F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))").alias(
-                "syms"
-            ),
-            "wf",
-        )
-    )
-    prev_ids: frozenset[int] = frozenset()
     merges: list[tuple[int, str, str, int]] = []
-    try:
+    with LineageCuts(spark.sparkContext) as cuts:
+        seqs = cuts.cut(
+            vocab.select(
+                *state_cols,
+                F.expr(
+                    "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
+                ).alias("syms"),
+                "wf",
+            )
+        )
         for rnd in range(1, n_merges + 1):
             # pairs as (left, right) STRUCTS, not a separator-joined
             # string: merged symbols can contain ANY character, so no
@@ -1835,22 +1826,16 @@ def bpe_learn_merges(
                 .limit(1)
                 .collect()
             )
-            # the collect materialized the current round's checkpoint;
-            # the round before it is now droppable
-            unpersist_rdds(sc, prev_ids)
-            prev_ids = frozenset()
+            cuts.materialized()
             if not top:
                 break
             left, right = top[0]["l"], top[0]["r"]
             merges.append((rnd, left, right, int(top[0]["freq"])))
             merged = _bpe_merge_step("syms", left, right)
-            seqs, new_ids = _chk(
-                seqs.select(*state_cols, merged.alias("syms"), "wf")
-            )
-            prev_ids, cur_ids = cur_ids, new_ids
-    except BaseException:
-        unpersist_rdds(sc, prev_ids | cur_ids)
-        raise
+            seqs = cuts.cut(seqs.select(*state_cols, merged.alias("syms"), "wf"))
+        if not return_vocab_state:
+            # no symbol frame outlives the trainer
+            cuts.release()
     # Build the merge table through the pandas/Arrow path: it becomes
     # a true LocalTableScan. createDataFrame over a plain Python list
     # parallelizes it into defaultParallelism pickled slices instead —
@@ -1873,17 +1858,7 @@ def bpe_learn_merges(
         "round long, left string, right string, freq long",
     )
     if return_vocab_state:
-        # the final round's checkpoint is LAZY and still unmaterialized
-        # here — recomputing it later needs the PREVIOUS round's blocks
-        # too, so BOTH frames stay tracked until the next query
-        # boundary (releasing prev here reproduced
-        # CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND in the consumer's job)
-        track_rdds(prev_ids | cur_ids, sc=sc)
         return merge_table, seqs.select("w", "syms")
-    # the returned merge table is a LocalRelation — no symbol frame
-    # outlives the trainer (unpersisting a never-materialized lazy
-    # checkpoint is a no-op)
-    unpersist_rdds(sc, prev_ids | cur_ids)
     return merge_table
 
 
@@ -1911,8 +1886,8 @@ def bpe_apply_merges(
     makes logical-plan depth linear in table size, so Catalyst's
     analyzer — not execution — becomes the wall somewhere in the
     low thousands of merges; tables near the ~100k production scale
-    need the layering chunked with a periodic ``localCheckpoint``
-    lineage cut (the trainer's own per-round discipline), which no
+    need the layering chunked with a periodic lineage cut
+    (operators/iterate.py, the trainer's own per-round cut), which no
     in-repo caller requires today. The rewrite
     runs on the DISTINCT-word frame (the trainer's own collapse, r10
     verdict item 3): a word seen a billion times is rewritten once and

@@ -1,22 +1,16 @@
 """Streaming sinks (SURVEY.md §2.2 K1-K4).
 
-- console / memory sinks for the reference's ``.print()`` surface;
-- tagged side outputs (Flink OutputTag) → ``result_type`` filter on
-  one output stream;
+- console sink for the reference's ``.print()`` surface;
 - Kafka sink for pipeline feeds;
-- `foreachBatch` for per-micro-batch ranking (R2's late-update-safe
-  Top-N) and for arbitrary external stores (replacing the Redis sink
-  K3 — the Bloom-filter/bitmap state it held lives in Spark streaming
-  state instead, SURVEY.md §4).
+- parquet file sink with exactly-once checkpointing;
+- `foreachBatch` changelog sink for the retract stream K4.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter
 
 
 def console_sink(df: DataFrame, mode: str = "update", truncate: bool = False) -> DataStreamWriter:
@@ -24,16 +18,6 @@ def console_sink(df: DataFrame, mode: str = "update", truncate: bool = False) ->
     for the retract stream K4 — Spark re-emits corrected rows instead
     of explicit (false,-U)/(true,+U) pairs)."""
     return df.writeStream.outputMode(mode).format("console").option("truncate", truncate)
-
-
-def memory_sink(df: DataFrame, name: str, mode: str = "append") -> StreamingQuery:
-    """Test sink: materialize into an in-memory table."""
-    return df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-
-
-def side_output(df: DataFrame, tag: str, tag_col: str = "result_type") -> DataFrame:
-    """K2: getSideOutput(tag) → filter on the tagged-union column."""
-    return df.filter(df[tag_col] == tag)
 
 
 def kafka_sink(
@@ -62,14 +46,6 @@ def parquet_sink(
         .option("checkpointLocation", checkpoint)
     )
     return w.partitionBy(*partition_cols) if partition_cols else w
-
-
-def foreach_batch_sink(
-    df: DataFrame, fn: Callable[[DataFrame, int], None], mode: str = "update"
-) -> DataStreamWriter:
-    """Escape hatch for per-batch logic (ranking, external stores,
-    multi-sink fan-out) with exactly-once-per-batch semantics."""
-    return df.writeStream.outputMode(mode).foreachBatch(fn)
 
 
 def changelog_sink(

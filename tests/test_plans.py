@@ -467,8 +467,8 @@ PLAN_BOUNDS = {
     "media_phash_dedup": (1, 0),
     # the registered query parity-splits the corpus, so its "batch" is
     # NOT small: no broadcast hints (a corpus-sized batch must degrade
-    # to a shuffle, not die on the broadcast ceiling — the pagerank
-    # broadcast_ranks precedent); post-persist stats are unknown, so
+    # to a shuffle, not die on the broadcast ceiling — the reason the
+    # pagerank rank join carries no hint either); post-persist stats are unknown, so
     # the STATIC plan shows SMJs that AQE broadcasts at runtime when a
     # side is genuinely small (the media_features_check convention)
     "media_phash_incremental": (3, 2),
@@ -636,16 +636,19 @@ def test_iterative_loop_body_shapes(spark, sf_dir):
     Auto-broadcast is disabled for the audit, which makes the pins
     data-size-independent HINT detection: any BroadcastHashJoin left
     in the plan comes from a forced hint. The scale contract being
-    pinned: the rank/label side of the per-round join is NEVER
-    hint-broadcast (a billion-node rank frame must shuffle, not
-    collect through the driver — the r15 broadcast_ranks default), and
-    the only hinted build in the PageRank round is the one-time wsum
-    frame. Join counts are doubled by the formatted plan's
-    tree+details sections (the BNLJ sweep's convention)."""
+    pinned: neither the rank/label side of the per-round join nor the
+    one-time wsum frame is ever hint-broadcast (a billion-node rank
+    frame must shuffle, not collect through the driver). Join counts
+    are doubled by the formatted plan's tree+details sections (the
+    BNLJ sweep's convention)."""
     from pyspark.sql import functions as F
 
     from flink_kafka_spark.operators.dedup import cc_loop_body
-    from flink_kafka_spark.operators.graph import pagerank_loop_body
+    from flink_kafka_spark.operators.graph import (
+        _pr_inputs,
+        _pr_round,
+        pagerank_loop_body,
+    )
     from flink_kafka_spark.tables import load
 
     docs = load(spark, sf_dir, "documents")
@@ -658,14 +661,22 @@ def test_iterative_loop_body_shapes(spark, sf_dir):
     pairs = docs.select(
         F.col("doc_id").alias("id_a"), (F.col("doc_id") + 1).alias("id_b")
     )
+    # the hint-detection canary: one PageRank round with BOTH joins
+    # forced to broadcast, built here from the shared round body
+    wsum = edges.groupBy("src").agg(F.sum("w").alias("wsum"))
+    e_hinted = (
+        edges.join(F.broadcast(wsum), "src")
+        .select("src", "dst", "w", "wsum")
+        .repartition("src")
+    )
+    node_frame, _, zeros = _pr_inputs(edges, nodes, "id", persist=False)
+    ranks = node_frame.withColumn("r", F.lit(10**9).cast("long"))
     prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
     try:
         pr = audit(pagerank_loop_body(edges, nodes))
         pr_hinted = audit(
-            pagerank_loop_body(
-                edges, nodes, broadcast_ranks=True, broadcast_wsum=True
-            )
+            _pr_round(e_hinted, F.broadcast(ranks), zeros, 15 * 10**7, 85)
         )
         cc = audit(cc_loop_body(pairs, jump=True))
         cc_plain = audit(cc_loop_body(pairs, jump=False))
@@ -677,9 +688,9 @@ def test_iterative_loop_body_shapes(spark, sf_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
 
     problems = []
-    # PageRank round, default hints OFF everywhere (r16: the wsum hint
-    # became opt-in too — a node-count-sized forced broadcast dies on
-    # the driver ceiling for a billion-node graph): NO broadcast node
+    # PageRank round, no hints anywhere (a node-count-sized forced
+    # broadcast dies on the driver ceiling for a billion-node graph):
+    # NO broadcast node
     # may appear; both the setup wsum join and the per-round rank join
     # are shuffle joins the planner/AQE may upgrade at runtime.
     if pr["broadcasts"] != 0:
@@ -693,11 +704,11 @@ def test_iterative_loop_body_shapes(spark, sf_dir):
             f"exchanges={pr['exchanges']} (ceiling 4)"
         )
     # the canary that the mechanism detects forced hints at all: with
-    # BOTH opt-ins armed, both joins must show as broadcasts (4 = two
-    # joins, tree+detail doubled) and no SMJ remains
+    # both joins hinted, both must show as broadcasts (4 = two joins,
+    # tree+detail doubled) and no SMJ remains
     if pr_hinted["broadcasts"] != 4 or pr_hinted["smj"] != 0:
         problems.append(
-            "hint-detection canary broken: broadcast_ranks+broadcast_wsum "
+            "hint-detection canary broken: hinted rank+wsum joins "
             f"shows bc={pr_hinted['broadcasts']} (want 4), "
             f"smj={pr_hinted['smj']} (want 0)"
         )

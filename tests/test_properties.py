@@ -306,36 +306,124 @@ def test_corpus_shuffle_is_a_partitioning_invariant_permutation(spark):
     assert other != out[1]  # seed changes the permutation
 
 
-def test_cc_checkpoints_release_at_query_boundary(spark):
-    """Round-5 verdict item 1 as a mechanical guard: the CC loop's
-    localCheckpoint persists are invisible to DataFrame
-    unpersist/clearCache, so the loop must hold at most the FINAL
-    labels checkpoint after it returns (earlier rounds unpersisted as
-    each new round materializes), and release_all() must drop that
-    too — a refactor that re-strands round checkpoints fails here, not
-    in the next bench's leak probe."""
-    from pyspark.sql import functions as F
+def test_cc_checkpoints_release_at_query_boundary(spark, monkeypatch):
+    """Round-5 verdict item 1 as a mechanical guard, for every fixpoint
+    loop (PageRank, connected components, the BPE trainer with its
+    vocabulary state): their localCheckpoint cuts are invisible to
+    DataFrame unpersist/clearCache, so
+
+    - after a normal run each loop holds ONLY the cuts backing its
+      returned frame (the last cut; for BPE also its unmaterialized
+      parent), and release_all() drops those too;
+    - when the loop's materializing action raises mid-loop, no cut
+      survives release_all() + clearCache().
+
+    A refactor that re-strands round checkpoints fails here, not in
+    the next bench's leak probe."""
+    from pyspark.sql.classic.dataframe import DataFrame
 
     from flink_kafka_spark.caching import release_all
     from flink_kafka_spark.operators.dedup import connected_components
+    from flink_kafka_spark.operators.graph import pagerank
+    from flink_kafka_spark.operators.text import bpe_learn_merges
 
-    release_all()
-    spark.catalog.clearCache()
     jsc = spark.sparkContext._jsc
-    base = jsc.getPersistentRDDs().size()
-    n = 1000  # diameter-9 chains: several loop rounds
-    edges = (
+
+    def persistent() -> set[int]:
+        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+    # the RDD ids each localCheckpoint call registers, in call order
+    cuts: list[set[int]] = []
+    orig_chk = DataFrame.localCheckpoint
+
+    def recording(self, eager=True):
+        before = persistent()
+        out = orig_chk(self, eager=eager)
+        cuts.append(persistent() - before)
+        return out
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+
+    n = 1000  # diameter-9 chains: several CC rounds
+    cc_edges = (
         spark.range(n)
         .filter("pmod(id, 10) < 9")
         .select(F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b"))
     )
-    nodes = spark.range(n).select(F.col("id").alias("doc_id"))
-    assert connected_components(edges, nodes, id_col="doc_id").count() == n
-    resident = jsc.getPersistentRDDs().size() - base
-    assert resident <= 1, f"{resident} persistent RDDs after CC (want <=1: final labels)"
+    cc_nodes = spark.range(n).select(F.col("id").alias("doc_id"))
+    pr_nodes = spark.range(100)
+    pr_edges = pr_nodes.select(
+        F.col("id").alias("src"),
+        F.explode(
+            F.array(F.pmod(F.col("id") + 1, 100), F.pmod(F.col("id") * 7 + 3, 100))
+        ).alias("dst"),
+        (F.pmod("id", 3) + 1).alias("w"),
+    )
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(
+            ["the quick brown fox", "the lazy dog", "a quick brown dog",
+             "the fox and the dog", "brown foxes and lazy dogs"]
+        )],
+        "doc_id long, text string",
+    )
+
+    def run_pagerank():
+        out = pagerank(pr_edges, pr_nodes, "id", iterations=9)
+        return out, lambda: out.count() == 100, 1
+
+    def run_cc():
+        out = connected_components(cc_edges, cc_nodes, id_col="doc_id")
+        return out, lambda: out.count() == n, 1
+
+    def run_bpe():
+        merges, state = bpe_learn_merges(docs, n_merges=4, return_vocab_state=True)
+        return state, lambda: merges.count() == 4 and state.count() > 0, 2
+
+    loops = [
+        ("pagerank", run_pagerank, "count"),
+        ("connected_components", run_cc, "collect"),
+        ("bpe_learn_merges", run_bpe, "collect"),
+    ]
+
+    class Injected(RuntimeError):
+        pass
+
     release_all()
     spark.catalog.clearCache()
-    assert jsc.getPersistentRDDs().size() <= base
+    base = persistent()
+    for name, run, action in loops:
+        # normal run
+        cuts.clear()
+        _, consume, n_backing = run()
+        held = persistent() - base
+        backing = set().union(*cuts[-n_backing:])
+        assert held & set().union(*cuts) == backing, (
+            f"{name}: holds cuts {sorted(held & set().union(*cuts))}, "
+            f"want only the {n_backing} backing the result {sorted(backing)}"
+        )
+        assert consume(), name
+        release_all()
+        spark.catalog.clearCache()
+        assert persistent() <= base, f"{name}: persists survive release_all"
+
+        # the materializing action raises once three cuts exist
+        cuts.clear()
+        orig_action = getattr(DataFrame, action)
+
+        def failing(self, *a, _orig=orig_action, **k):
+            if len(cuts) >= 3:
+                raise Injected(action)
+            return _orig(self, *a, **k)
+
+        with monkeypatch.context() as m:
+            m.setattr(DataFrame, action, failing)
+            with pytest.raises(Injected):
+                run()
+        assert len(cuts) >= 3, f"{name}: failure injected before the loop"
+        release_all()
+        spark.catalog.clearCache()
+        leaked = persistent() - base
+        assert not leaked, f"{name}: {len(leaked)} persistent RDDs leaked on raise"
 
 
 def test_span_dup_stats_counts_cross_doc_spans_only(spark):
@@ -1253,13 +1341,12 @@ def test_pagerank_star_center_dominates_and_mass_is_bounded(spark):
 def test_pagerank_broadcast_ranks_off_plans_no_rank_broadcast(spark, monkeypatch):
     """The billion-node scale contract, executable: with the broadcast
     threshold disabled (simulating a rank frame too big to broadcast),
-    the default broadcast_ranks=False path must plan the per-round
-    rank join as a shuffle join — NO planner-forced broadcast build of
-    the rank frame — while broadcast_ranks=True forces one per round.
-    Both paths must stay bit-identical to the pure-Python integer
-    replay. Round plans are captured at the operator's own checkpoint
-    boundary (the returned frame is a checkpoint scan, so its plan no
-    longer shows the join)."""
+    pagerank must plan the per-round rank join as a shuffle join — NO
+    planner-forced broadcast build of the rank frame — and stay
+    bit-identical to the pure-Python integer replay. Round plans are
+    captured at the operator's own checkpoint boundary (the returned
+    frame is a checkpoint scan, so its plan no longer shows the
+    join)."""
     # patch the CONCRETE class: pyspark.sql.DataFrame is the dispatch
     # base in PySpark 4 and instance lookup resolves on the subclass
     from pyspark.sql.classic.dataframe import DataFrame
@@ -1282,33 +1369,19 @@ def test_pagerank_broadcast_ranks_off_plans_no_rank_broadcast(spark, monkeypatch
     edges += [(v, "dangling", 2) for v in ("a", "b", "c")]
     ndf = spark.createDataFrame([(v,) for v in nodes], "id string")
     edf = spark.createDataFrame(edges, "src string, dst string, w long")
-    want = _py_pagerank(edges, nodes)
 
     old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        got_off = {r["node"]: r["rank_e9"] for r in pagerank(edf, ndf, "id").collect()}
-        plans_off, captured[:] = list(captured), []
-        got_on = {
-            r["node"]: r["rank_e9"]
-            for r in pagerank(edf, ndf, "id", broadcast_ranks=True).collect()
-        }
-        plans_on, captured[:] = list(captured), []
+        got = {r["node"]: r["rank_e9"] for r in pagerank(edf, ndf, "id").collect()}
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
 
-    assert got_off == want and got_on == want  # bit-identical paths
-    assert plans_off and plans_on
-    # Off path: every round joins ranks by shuffle; the only broadcast
-    # allowed in the tree is the hinted wsum precompute inside the
-    # persisted edge frame's (unmaterialized) cache plan.
-    for p in plans_off:
+    assert got == _py_pagerank(edges, nodes)
+    assert captured
+    # every round joins ranks by shuffle
+    for p in captured:
         assert "SortMergeJoin" in p or "ShuffledHashJoin" in p
-    # On path: the hint forces a rank-side broadcast build the off
-    # path does not have (strictly more BroadcastExchanges per plan).
-    n_b_off = max(p.count("BroadcastExchange") for p in plans_off)
-    n_b_on = max(p.count("BroadcastExchange") for p in plans_on)
-    assert n_b_on > n_b_off
 
 
 def test_hll_rollup_union_is_lossless_and_accurate(spark):

@@ -1224,66 +1224,6 @@ def test_session_stream_matches_batch_session_window(spark, tmp_path):
     assert got == want and len(got) >= 12
 
 
-# --- transformWithStateInPandas spike (Spark 4.x typed state + timers) ---
-
-
-def test_order_timeout_tws_matches_applyinpandas(spark, tmp_path):
-    """The transformWithStateInPandas twin must produce exactly the
-    rows the production applyInPandasWithState operator does on a
-    multi-batch replay covering all four outcomes plus out-of-order
-    pay-before-create (r9 verdict item 7 — decision note on the
-    operator's docstring). transformWithState's state protocol
-    imports google.protobuf at query start; this runtime doesn't ship
-    it, so the test skips here and executes on runtimes that do."""
-    pytest.importorskip("google.protobuf")
-    from flink_kafka_spark.streaming.stateful import order_timeout_stream_tws
-
-    t = 1_700_000_000
-    _write_lines(
-        str(tmp_path / "in" / "b1.csv"),
-        [
-            f"1,create,,{t}",
-            f"1,pay,tx1,{t + 100}",        # payed
-            f"2,create,,{t}",              # -> order timeout
-            f"4,pay,tx4,{t + 10}",         # -> payed but not found created log
-            f"5,pay,tx5,{t + 1000}",       # pay first ...
-            f"5,create,,{t + 20}",         # ... create arrives later, within 900? 1000-20=980 > 900
-        ],
-        mtime=1_000_000,
-    )
-    _write_lines(
-        str(tmp_path / "in" / "b2.csv"), [f"3,create,,{t + 10000}"], mtime=2_000_000
-    )
-
-    def run(op, name, provider=None):
-        old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        if provider:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-        try:
-            stream = csv_replay_source(
-                spark, str(tmp_path / "in"), ORDER_EVENT, max_files_per_trigger=1
-            ).withWatermark("ts", "0 seconds")
-            _run_stream_until(spark, op(stream, timeout_s=900), name, 4)
-        finally:
-            if provider and old:
-                spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
-            elif provider:
-                spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        return sorted(
-            map(tuple, spark.sql(f"SELECT * FROM {name}").collect())
-        )
-
-    want = run(order_timeout_stream, "tws_base_out")
-    got = run(
-        order_timeout_stream_tws,
-        "tws_new_out",
-        provider="org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    assert got == want
-    assert (5, t + 20, t + 1000, "payed but already timeout") in got
-    assert len(got) >= 4
-
-
 def test_cms_stream_exactly_equals_batch_sketch(spark, tmp_path):
     """Continuous CM sketch across micro-batches: the merge is counter
     ADDITION, so the streamed estimates after two batches must EQUAL

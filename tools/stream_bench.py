@@ -113,6 +113,18 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     listener = PeakStateListener()
     spark.streams.addListener(listener)
+    # the listener is a Python callback the JVM calls into: remove it
+    # before the session stops, or the JVM's listener bus fails against
+    # the closed gateway at exit
+    try:
+        timings, state = _run_all(spark, listener, n)
+    finally:
+        spark.streams.removeListener(listener)
+        spark.stop()
+    print(json.dumps({"stream_bench": timings, "state": state, "n": n}))
+
+
+def _run_all(spark, listener: PeakStateListener, n: int) -> "tuple[dict, dict]":
     timings: dict[str, float] = {}
     state: dict[str, dict] = {}
 
@@ -506,8 +518,7 @@ def main() -> None:
             "peak_batch_flagged": peak.get("manifest_rows", 0)
         }
         idx.unpersist()
-
-    print(json.dumps({"stream_bench": timings, "state": state, "n": n}))
+    return timings, state
 
 
 if __name__ == "__main__":
