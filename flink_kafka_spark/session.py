@@ -11,6 +11,12 @@ real multi-executor cluster at ~100 TB scale:
 - Session timezone pinned to UTC so event-time semantics (and the
   DuckDB oracle comparison) are deterministic.
 - Arrow enabled: every Pandas-UDF operator ships columnar batches.
+- Python workers run ``flink_kafka_spark.pyworker`` as their daemon
+  (``spark.python.daemon.module``), which keeps each task from
+  re-reading ``pyspark.zip`` once per imported pyspark package, and get
+  the package's parent directory on ``PYTHONPATH``
+  (``spark.executorEnv.PYTHONPATH``), so the daemon and UDFs that
+  reference engine functions import from any working directory.
 """
 
 from __future__ import annotations
@@ -20,6 +26,7 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _cpus() -> int:
@@ -53,6 +60,8 @@ def get_spark(
         # no native type for; read as long and convert in tables.load()
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.shuffle.spill.compress", "true")
+        .config("spark.python.daemon.module", "flink_kafka_spark.pyworker")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
