@@ -10,19 +10,26 @@ extends them with large-scale training-data-pipeline operators
 Architecture (see SURVEY.md §7):
 
 - ``session``    — tuned SparkSession factory (AQE, UTC, arrow).
+- ``pyworker``   — PySpark's worker daemon with the per-task zip
+  importer re-reads removed (``get_spark`` sessions use it).
 - ``tables``     — testdata/fixture loaders + temp-view registration.
+- ``schemas``    — schemas and CSV line parsers for the reference's
+  input streams and checked-in fixtures.
+- ``io``         — partitioned/bucketed parquet, JSONL with corrupt-line
+  capture, small-file compaction, epoch-order writers.
+- ``caching``    — lifecycle tracking for operator-internal persists,
+  released at query boundaries.
 - ``operators/`` — reusable ``DataFrame -> DataFrame`` building blocks,
   one module per capability family (windows, topn, joins, patterns,
-  fraud, dedup, similarity, text, multimodal). Batch and streaming
-  share these.
+  dedup, similarity, text, multimodal, sketches, graph, iterate, dq,
+  drift, layout, sampling, timeseries, versioning). Batch and
+  streaming share these.
 - ``queries/``   — the registry of named queries: each entry pairs a
   Spark callable ``(spark, sf_dir) -> DataFrame`` with an ANSI-SQL
   oracle string runnable by DuckDB on the same tables.
 - ``streaming/`` — Structured Streaming variants: sources (kafka /
   socket / rate / file), sinks, watermarked windowed aggs, and the
   stateful operators (applyInPandasWithState) for CEP-like detection.
-- ``plans/``     — the 12 reference pipelines reassembled from
-  operators, plus ``.explain`` helpers used to audit physical plans.
 
 Everything here is built only on the public Apache Spark / PySpark API.
 """

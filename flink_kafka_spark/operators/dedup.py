@@ -97,6 +97,53 @@ def shingles(df: DataFrame, id_col: str, n: int = 3) -> DataFrame:
     )
 
 
+def _bucket_pairs(buckets: DataFrame, width=None) -> DataFrame:
+    """(id_a, id_b) pairs out of each row's sorted ``ids`` array, id_a
+    < id_b: two nested generators (posexplode + explode(slice)) stream
+    the pairs, so peak memory is O(bucket), never O(bucket²).
+
+    ``width`` (a Column) caps each id to its next ``width`` neighbours
+    in the array (MinHash's ``max_bucket`` neighbourhood); ``None``
+    pairs every id with all later ones. The uncapped slice end stays
+    an inline ``size(ids)``: projecting it as a column changes the
+    size estimates the join planner picks build sides from."""
+    cols, end = ["ids"], "size(ids)"
+    if width is not None:
+        buckets, cols, end = buckets.withColumn("_w", width), ["ids", "_w"], "_w"
+    return buckets.select(*cols, F.posexplode("ids").alias("_i", "id_a")).select(
+        "id_a", F.expr(f"explode(slice(ids, _i + 2, {end}))").alias("id_b")
+    )
+
+
+def _shared_key_counts(items: DataFrame, id_col: str, key_col: str, stop_df: int) -> DataFrame:
+    """Pair counts over distinct (id, key) ``items``: id_a < id_b,
+    n_inter (shared keys, counting only keys held by 2..``stop_df``
+    docs), size_a and size_b (each doc's full key count).
+
+    ``items`` is cached lazily for its two consumers (sizes, buckets):
+    the first stage fills it and block locks make the second wait and
+    read, where an eager count() would only add a job. sizes is
+    persisted because it joins twice (id_a, id_b) and the renames
+    defeat exchange reuse, so each side would re-run the groupBy over
+    the items cache. Buckets over ``stop_df`` (boilerplate keys) drop
+    before any fan-out; pairs then take one shuffle. The sizes joins
+    carry no broadcast hint: sizes is one row per doc, the pair set is
+    small, and AQE broadcasts the pair side when it fits."""
+    from ..caching import track
+
+    items = track(items.cache())
+    sizes = track(items.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_keys")).persist())
+    buckets = (
+        items.groupBy(key_col)
+        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+        .filter((F.size("ids") >= 2) & (F.size("ids") <= stop_df))
+    )
+    inter = _bucket_pairs(buckets).groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_inter"))
+    sa = sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_keys", "size_a")
+    sb = sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_keys", "size_b")
+    return inter.join(sa, "id_a").join(sb, "id_b")
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -119,50 +166,9 @@ def ngram_jaccard_pairs(
       construction. Raise ``stop_df`` (or inspect
       :func:`shingle_prune_stats`) when the corpus has heavy shingle
       reuse; MinHash+LSH is the production path for unknown corpora."""
-    from ..caching import track
-
-    # lazy cache, two consumers (sizes + buckets): the first stage to
-    # run fills it and the block-manager's per-block locks make the
-    # concurrent second wait-and-read — an eager count() would only
-    # spend an extra job (same pattern as the MinHash sets persist)
-    sh = track(shingles(df, id_col, n).cache())
-    # sizes persists too (r19): it joins the pair frame TWICE (the
-    # id_a and id_b renames), and the rename above the aggregate
-    # defeats exchange reuse — unpersisted, each side re-scanned the
-    # corpus-sized shingle cache and re-ran the groupBy for a frame
-    # that is one narrow row per doc (the signature-table class)
-    sizes = track(
-        sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles")).persist()
-    )
-    # Intersection counts via single-shuffle bucket pairing (the same
-    # shape as the MinHash band buckets): group each shingle's ids,
-    # drop stop-shingle buckets (df > stop_df) BEFORE any fan-out,
-    # stream ordered pairs out of the sorted id array with nested
-    # generators (peak memory O(bucket), bounded by stop_df), then
-    # count shared shingles per pair. The previous formulation
-    # (per-shingle df groupBy + join back + a×b self-join) shuffled
-    # the corpus-sized (id, shingle) frame three times for the same
-    # pair multiset.
-    buckets = (
-        sh.groupBy("shingle")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= stop_df))
-    )
-    inter = (
-        buckets.select("ids", F.posexplode("ids").alias("_i", "id_a"))
-        .select("id_a", F.expr("explode(slice(ids, _i + 2, size(ids)))").alias("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_shingles", "size_a")
-    sb = sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_shingles", "size_b")
-    # no broadcast hint on the sizes joins: sizes is one row per DOC
-    # (corpus-sized at scale) while inter is the near-dup pair set
-    # (small) — AQE broadcasts the pair side when it fits
+    counts = _shared_key_counts(shingles(df, id_col, n), id_col, "shingle", stop_df)
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
+        counts.withColumn(
             "jaccard",
             F.round(
                 F.col("n_inter") / (F.col("size_a") + F.col("size_b") - F.col("n_inter")), 6
@@ -190,47 +196,21 @@ def containment_pairs(
     quote/subset detector run alongside Jaccard dedup on crawl corpora
     (cf. Broder's containment coefficient).
 
-    Same single-shuffle bucket-pairing plan as
-    :func:`ngram_jaccard_pairs` (shared ``shingles`` scan, stop-shingle
-    pruning before any fan-out), and the same lower-bound trade: the
-    intersection counts only rare shingles (document frequency ≤
-    stop_df) while min(|A|, |B|) uses the full set sizes, so the
-    reported containment is a lower bound on the true value — emitted
-    pairs are guaranteed ≥ threshold, pairs witnessed mainly by
-    frequent shingles can be missed.
-
-    Scale (100 TB): shuffle keys are shingles and (id_a, id_b) pairs,
-    never bodies; per-bucket fan-out is bounded by stop_df; the sizes
-    join is doc-count-sized on the build side but pair-sized on the
-    probe side, and AQE broadcasts the pair side when it fits —
-    identical shape to the Jaccard twin, no new scale surface."""
-    from ..caching import track
-
-    sh = track(shingles(df, id_col, n).cache())
-    # persisted for the same two-rename reason as the Jaccard twin
-    sizes = track(
-        sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_shingles")).persist()
-    )
-    buckets = (
-        sh.groupBy("shingle")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= stop_df))
-    )
-    inter = (
-        buckets.select("ids", F.posexplode("ids").alias("_i", "id_a"))
-        .select("id_a", F.expr("explode(slice(ids, _i + 2, size(ids)))").alias("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_shingles", "size_a")
-    sb = sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_shingles", "size_b")
+    Same :func:`_shared_key_counts` plan as :func:`ngram_jaccard_pairs`
+    (shared ``shingles`` scan, stop-shingle pruning before any
+    fan-out), and the same lower-bound trade: the intersection counts
+    only rare shingles (document frequency ≤ stop_df) while min(|A|,
+    |B|) uses the full set sizes, so the reported containment is a
+    lower bound on the true value — emitted pairs are guaranteed ≥
+    threshold, pairs witnessed mainly by frequent shingles can be
+    missed. Shuffle keys are shingles and (id_a, id_b) pairs, never
+    bodies."""
+    counts = _shared_key_counts(shingles(df, id_col, n), id_col, "shingle", stop_df)
     # floor-based round-half-up: n_inter/min(sizes) lands exactly on
     # decimal half-points (e.g. 1/2), where Spark's and DuckDB's
     # round() diverge (same convention as source_overlap_matrix)
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
+        counts.withColumn(
             "containment",
             F.expr("floor(n_inter / least(size_a, size_b) * 1000000 + 0.5) / 1000000"),
         )
@@ -465,9 +445,10 @@ def minhash_lsh_pairs(
     ``max_bucket`` bounds the quadratic pair OUTPUT of a pathological
     band bucket (the r13-verdict hardening; the fuzzy join's
     ``max_block`` is the sibling discipline): peak MEMORY was already
-    O(bucket) via the generator enumeration below, but a boilerplate
-    mega-bucket — 10⁵ copies of the same cookie banner hashing into
-    one (band, band_hash) — still emitted O(bucket²) candidate pairs.
+    O(bucket) via the generator enumeration (:func:`_bucket_pairs`),
+    but a boilerplate mega-bucket — 10⁵ copies of the same cookie
+    banner hashing into one (band, band_hash) — still emitted
+    O(bucket²) candidate pairs.
     With the cap, a bucket of size H > max_bucket switches from
     all-pairs to SORTED-NEIGHBORHOOD enumeration: each id pairs with
     its next ``w = max(1, max_bucket²/(2H))`` neighbors in the sorted
@@ -504,16 +485,14 @@ def minhash_lsh_pairs(
     # the Arrow kernel (see :func:`_band_hashes_udf`).
     banded = _lsh_bands(df, id_col, id_col, n, k, bands)
     # Candidate pairs via ONE shuffle: group each (band, band_hash)
-    # bucket, then stream ordered pairs out of the sorted id array with
-    # two nested generators (posexplode + explode(slice)) — generator
-    # semantics keep peak memory O(bucket), never O(bucket²), while the
-    # pair OUTPUT is the same set the old banded self-join produced
-    # with two shuffles of the same table.
+    # bucket and stream its pairs with _bucket_pairs — the same pair
+    # set the old banded self-join produced with two shuffles.
     buckets = (
         banded.groupBy("band", "band_hash")
         .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
+    width = None
     if max_bucket is not None:
         if max_bucket < 2:
             raise ValueError(f"max_bucket must be >= 2, got {max_bucket}")
@@ -527,13 +506,8 @@ def minhash_lsh_pairs(
                 F.lit(1),
                 F.floor(F.lit(max_bucket * max_bucket) / (2 * F.size("ids"))),
             )
-        )
-        buckets = buckets.withColumn("_w", width.cast("int"))
-    else:
-        buckets = buckets.withColumn("_w", F.size("ids"))
-    pairs = buckets.select(
-        "ids", "_w", F.posexplode("ids").alias("_i", "id_a")
-    ).select("id_a", F.expr("explode(slice(ids, _i + 2, _w))").alias("id_b"))
+        ).cast("int")
+    pairs = _bucket_pairs(buckets, width)
     # Candidates are tiny relative to the corpus (that is the point of
     # LSH); cache them because two consumers follow (the id-set
     # broadcast + the verification join), and the broadcast exchange

@@ -565,56 +565,29 @@ def winnow_overlap_pairs(
     and score overlap = n_shared / min(|fps_a|, |fps_b|) (containment
     convention, floor-rounded at 6 dp like the shingle family).
 
-    Why this next to the Jaccard/containment detectors: identical
-    bucket-pairing plan, but the bucketed items are the winnowed
-    sub-sample — ~2/(w+1) of the shingle set — so the groupBy and the
-    pair fan-out ship ~4.5x less at the same w+k-1-token overlap
-    guarantee (every shared verbatim run >= 11 tokens lands in some
-    bucket; a pair sharing only SHORTER runs may be missed — the
-    documented trade, same class as the stop-shingle lower bound).
+    Why this next to the Jaccard/containment detectors: the same
+    :func:`~.dedup._shared_key_counts` plan, but the bucketed items
+    are the winnowed sub-sample — ~2/(w+1) of the shingle set — so
+    the groupBy and the pair fan-out ship ~4.5x less at the same
+    w+k-1-token overlap guarantee (every shared verbatim run >= 11
+    tokens lands in some bucket; a pair sharing only SHORTER runs may
+    be missed — the documented trade, same class as the stop-shingle
+    lower bound).
+    Shuffle keys are 40-bit hashes and (id_a, id_b) pairs, never text."""
+    from .dedup import _shared_key_counts
 
-    Scale (100 TB): shuffle keys are 40-bit hashes and (id_a, id_b)
-    pairs, never text; per-bucket fan-out bounded by ``stop_df``; the
-    sizes join is doc-count-sized on the build side and pair-sized on
-    the probe side (AQE broadcasts the pair side when it fits) —
-    byte-for-byte the containment_pairs shape over smaller input."""
-    from ..caching import track
-
-    fps = track(
-        winnow_fingerprints(df, id_col, text_col, k, w)
-        .select(id_col, "fp_hash")
-        .distinct()
-        .cache()
-    )
-    # sizes persists too (r19): it joins the pair frame twice (id_a /
-    # id_b renames) and the rename defeats exchange reuse — each side
-    # otherwise re-scans the corpus-sized fps cache for a one-narrow-
-    # row-per-doc frame (the bucket-pairing family's shared fix)
-    sizes = track(
-        fps.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_fp")).persist()
-    )
-    buckets = (
-        fps.groupBy("fp_hash")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
-        .filter((F.size("ids") >= 2) & (F.size("ids") <= stop_df))
-    )
-    inter = (
-        buckets.select("ids", F.posexplode("ids").alias("_i", "id_a"))
-        .select("id_a", F.expr("explode(slice(ids, _i + 2, size(ids)))").alias("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
-    sa = sizes.withColumnRenamed(id_col, "id_a").withColumnRenamed("n_fp", "fp_a")
-    sb = sizes.withColumnRenamed(id_col, "id_b").withColumnRenamed("n_fp", "fp_b")
+    fps = winnow_fingerprints(df, id_col, text_col, k, w).select(id_col, "fp_hash").distinct()
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
+        _shared_key_counts(fps, id_col, "fp_hash", stop_df)
+        .filter(F.col("n_inter") >= min_shared)
         .withColumn(
             "overlap",
-            F.expr("floor(n_shared / least(fp_a, fp_b) * 1000000 + 0.5) / 1000000"),
+            F.expr("floor(n_inter / least(size_a, size_b) * 1000000 + 0.5) / 1000000"),
         )
-        .select("id_a", "id_b", "n_shared", "fp_a", "fp_b", "overlap")
+        .select(
+            "id_a", "id_b", F.col("n_inter").alias("n_shared"),
+            F.col("size_a").alias("fp_a"), F.col("size_b").alias("fp_b"), "overlap",
+        )
     )
 
 

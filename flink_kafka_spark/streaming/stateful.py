@@ -43,7 +43,7 @@ def _epoch_s(pdf: pd.DataFrame, col: str = "ts") -> np.ndarray:
     return pdf[col].to_numpy().astype("datetime64[s]").astype("int64")
 
 
-def login_fail_stream(events: DataFrame, max_gap_s: int = 2, max_fails: int = 2) -> DataFrame:
+def login_fail_stream(events: DataFrame, max_gap_s: int = 2) -> DataFrame:
     """T1/T2: warn when two consecutive fails for a user arrive within
     ``max_gap_s`` seconds (event time); an intervening success resets.
 

@@ -295,8 +295,9 @@ PLAN_BOUNDS = {
     # exchange growth here means a corpus-sized shuffle crept in
     "dedup_exact": (1, 0),
     "dedup_ngram_jaccard": (5, 0),  # narrow shingles + bucket pairing; +spread
-    # containment twin: identical bucket-pairing plan (shared shingle
-    # scan, stop-shingle pruning before fan-out), different score
+    # containment twin: the same operators/dedup.py::_shared_key_counts
+    # plan as the Jaccard row (shared shingle scan, stop-shingle
+    # pruning before fan-out), different score
     "dedup_containment": (5, 0),  # +spread
     "dedup_prune_stats": (3, 0),  # +spread
     # bench headline (not in DRIVER_WINDOW itself): fan-out repartition
@@ -418,9 +419,10 @@ PLAN_BOUNDS = {
     # per-row array expressions over one pushed scan — ZERO shuffle
     "doc_winnow_fingerprint": (1, 0),  # zero-shuffle pipeline +spread
     # overlap pairs on the winnowed sub-sample: fp distinct + per-doc
-    # sizes + hash-bucket groupBy + pair groupBy (the containment_pairs
-    # shape over ~2/(w+1) of the items); size joins must broadcast —
-    # an SMJ here means a corpus-sized build side crept in
+    # sizes + hash-bucket groupBy + pair groupBy (_shared_key_counts,
+    # as in containment_pairs, over ~2/(w+1) of the items); size joins
+    # must broadcast — an SMJ here means a corpus-sized build side
+    # crept in
     "winnow_overlap_pairs": (6, 0),  # +spread (fingerprint pass)
     # composed semantic pairs: the embedder's two shuffles (duplicated
     # pre-AQE across the pair join's sides, ReuseExchange collapses) +

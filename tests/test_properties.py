@@ -6,6 +6,8 @@ fixed fixtures can't (ties, duplicates, boundary gaps, empty keys).
 Examples are kept small and few (each runs a Spark job); the Python
 oracles are deliberately naive O(n²) code."""
 
+from collections import Counter
+
 import pytest
 
 from hypothesis import HealthCheck, given, settings
@@ -164,6 +166,89 @@ def test_ngram_jaccard_stop_shingle_miss_is_documented(spark):
     stats = shingle_prune_stats(docs, stop_df=2).collect()[0]
     assert stats.n_stop_shingles == stats.n_shingles  # everything pruned
     assert stats.occurrence_pruned_frac == 1.0
+
+
+# random (doc, key) items on docs 0..7 and keys 0..5, plus three planted
+# keys on a disjoint doc range that pin the stop_df boundary
+key_items_strategy = st.tuples(
+    st.sets(st.tuples(st.integers(0, 7), st.integers(0, 5)), max_size=30),
+    st.integers(2, 4),
+)
+EDGE_KEY, OVER_KEY, SOLO_KEY = 1000, 1001, 1002
+
+
+@given(data=key_items_strategy)
+@settings(**{**SETTINGS, "max_examples": 6})
+def test_shared_key_counts_matches_python(spark, data):
+    """The bucket-pairing family's shared counter against a brute-force
+    count: a key held by 2..stop_df docs counts toward every pair of
+    its holders, a key held by more (or by one) counts toward sizes
+    only."""
+    from flink_kafka_spark.caching import release_all
+    from flink_kafka_spark.operators.dedup import _shared_key_counts
+
+    items, stop_df = data
+    edge = list(range(100, 100 + stop_df))  # exactly stop_df holders
+    over = list(range(200, 201 + stop_df))  # stop_df + 1 holders
+    items = set(items)
+    items |= {(d, EDGE_KEY) for d in edge}
+    items |= {(d, OVER_KEY) for d in over}
+    items.add((100, SOLO_KEY))
+    df = spark.createDataFrame(sorted(items), "doc_id long, key long")
+    got = {
+        (r.id_a, r.id_b): (r.n_inter, r.size_a, r.size_b)
+        for r in _shared_key_counts(df, "doc_id", "key", stop_df).collect()
+    }
+    release_all()
+
+    holders: dict = {}
+    for d, k in items:
+        holders.setdefault(k, set()).add(d)
+    size = Counter(d for d, _ in items)
+    inter: dict = {}
+    for ds in holders.values():
+        if 2 <= len(ds) <= stop_df:
+            ds = sorted(ds)
+            for i, a in enumerate(ds):
+                for b in ds[i + 1:]:
+                    inter[(a, b)] = inter.get((a, b), 0) + 1
+    assert got == {p: (n, size[p[0]], size[p[1]]) for p, n in inter.items()}
+    # the boundary, stated directly: every edge pair counted once, no
+    # over pair at all, and the solo key in doc 100's size only
+    assert all(got[(a, b)][0] == 1 for a in edge for b in edge if a < b)
+    assert not any(a in over or b in over for a, b in got)
+    assert got[(100, 101)] == (1, 2, 1)
+
+
+# buckets of distinct sorted ids (disjoint id ranges, so no pair can
+# repeat across buckets) with a per-bucket neighbourhood width
+buckets_strategy = st.lists(
+    st.tuples(st.sets(st.integers(0, 20), min_size=1, max_size=8), st.integers(1, 9)),
+    min_size=1,
+    max_size=6,
+)
+
+
+@given(buckets=buckets_strategy)
+@settings(**{**SETTINGS, "max_examples": 8})
+def test_bucket_pairs_width_pairs_next_neighbours(spark, buckets):
+    """``_bucket_pairs`` pairs each id with exactly its next
+    min(width, remaining) sorted neighbours (all later ids when the
+    width is None), id_a < id_b, no duplicates."""
+    from flink_kafka_spark.operators.dedup import _bucket_pairs
+
+    rows = [(sorted(b * 100 + i for i in ids), w) for b, (ids, w) in enumerate(buckets)]
+    df = spark.createDataFrame(rows, "ids array<long>, w int")
+    for width, cap in ((F.col("w"), True), (None, False)):
+        got = Counter((r.id_a, r.id_b) for r in _bucket_pairs(df, width).collect())
+        want = Counter(
+            (ids[i], ids[j])
+            for ids, w in rows
+            for i in range(len(ids))
+            for j in range(i + 1, min(i + 1 + w, len(ids)) if cap else len(ids))
+        )
+        assert got == want
+        assert all(a < b and n == 1 for (a, b), n in got.items())
 
 
 def test_canonicalize_keeps_best_quality_not_min_id(spark):

@@ -17,7 +17,7 @@ SURVEY_IDS: dict[str, tuple[str, str]] = {
     "S1": ("Kafka consumer source", "streaming/sources.py:kafka_source; tests/test_source_contracts.py (option contract)"),
     "S2": ("Text-file source (CSV replay)", "streaming/sources.py:csv_replay_source; schemas.py:parse_csv_lines; tests/test_streaming.py"),
     "S3": ("Socket source", "streaming/sources.py:socket_source; tests/test_source_contracts.py (EXECUTED end-to-end vs an in-test TCP server, plus analyzed-plan pin)"),
-    "S4": ("Synthetic generator source", "streaming/sources.py:rate_marketing_source"),
+    "S4": ("Synthetic generator source", "streaming/sources.py:marketing_rate_source"),
     "S5": ("Kafka producer feed", "streaming/sinks.py:kafka_sink; tests/test_source_contracts.py (producer options + CSV payload)"),
     "K1": ("Console/print sink", "streaming/sinks.py:console_sink / memory sink in tests"),
     "K2": ("Side-output streams", "tagged result_type column: streaming/stateful.py (order_timeout/tx_match outputs)"),
@@ -93,7 +93,7 @@ EXTENSIONS = [
              " / winnowing fingerprints (MOSS rightmost-min selection,"
              " zero-shuffle array pipeline, w+k-1 overlap guarantee"
              " pytest-pinned) + shared-fingerprint overlap pairs"
-             " (containment_pairs' bucket-join shape over the ~2/(w+1)"
+             " (containment_pairs' _shared_key_counts plan over the ~2/(w+1)"
              " winnowed sub-sample) + train/eval winnow decontamination"
              " vs a stored eval fingerprint index (per-doc contamination"
              " evidence, planted-leak pytest; batch + streaming faces;"
